@@ -687,12 +687,15 @@ def check_sf1_regressions(
     ]
 
 
-def detail_artifact_path(repo: str = REPO) -> str:
-    """bench_detail_r{N}.json with N = (largest existing BENCH_r*.json
-    round) + 1 — the round whose driver artifact THIS bench run will
-    feed. The driver's stdout tail keeps only 2000 chars, which
-    truncated 21/54 per-query timings out of BENCH_r06; the full
-    detail map ships as a committed file instead (VERDICT r6 #5)."""
+def detail_artifact_path(cpus: int, repo: str = REPO) -> str:
+    """bench_detail_r{N}.cpus{C}.json with N = (largest existing
+    BENCH_r*.json round) + 1 — the round whose driver artifact THIS
+    bench run will feed — and C the core count it ran on. The driver's
+    stdout tail keeps only 2000 chars, which truncated 21/54 per-query
+    timings out of BENCH_r06; the full detail map ships as a committed
+    file instead (VERDICT r6 #5). Keying by cpus keeps a low-core probe
+    from overwriting the headline run's detail of the same round (an
+    8-core probe clobbered the 32-core detail behind BENCH_r15)."""
     import glob
     import re
 
@@ -702,7 +705,7 @@ def detail_artifact_path(repo: str = REPO) -> str:
         if (m := re.search(r"BENCH_r(\d+)\.json$", p))
     ]
     n = (max(rounds) + 1) if rounds else 1
-    return os.path.join(repo, f"bench_detail_r{n:02d}.json")
+    return os.path.join(repo, f"bench_detail_r{n:02d}.cpus{cpus}.json")
 
 
 def main() -> None:
@@ -792,7 +795,7 @@ def main() -> None:
         sf1_regressions=sf1_regressions,
     )
     try:  # the file artifact must never take down the driver contract
-        path = detail_artifact_path()
+        path = detail_artifact_path(cpus)
         with open(path, "w") as f:
             f.write(detail_line + "\n")
     except OSError as e:  # noqa: PERF203

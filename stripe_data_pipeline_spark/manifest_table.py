@@ -59,6 +59,7 @@ mixed) guarantee: see tests/test_manifest_table.py.
 
 from __future__ import annotations
 
+import copy
 import functools
 import json
 import os
@@ -255,6 +256,77 @@ def _commit(root: str, manifest: dict, _fault=None) -> None:
     _fsync_dir(root)
     if _fault:
         _fault("committed")
+
+
+# Why inheriting every field is the right default:
+# - constraints, expectations, generation and the bloom declaration are
+#   administrative metadata: compaction, deletes, restores and
+#   repartitions introduce no row the declarations have not passed;
+# - pending EQUALITY deletes are valid on any physical layout of the
+#   same logical rows, so every commit that does not materialize them
+#   keeps them — omitting the list resurrects every MOR-deleted row
+#   still physically present, and vacuum then reaps the orphaned
+#   delete files (ADVICE r9, high);
+# - POSITIONAL deletes follow a stricter rule: a (file, row_index)
+#   tuple is only valid while that exact file is referenced. Keeping
+#   them is correct for commits that touch no data file, or whose
+#   rewriting scan already applied them (_read_at does: delete_where);
+#   raw-scan rewriters (merge, update, compaction, apply_deletes)
+#   refuse while any are pending instead of keeping a lie;
+# - the quarantine map is data-bearing like the delete lists: dropping
+#   it makes the captured rows vanish and vacuum reaps their dirs. It
+#   needs no reader feature: its rows live outside ``parts``.
+
+# stamped by _commit on every version; never inherited from the parent
+_PER_COMMIT = ("committed_at_ms", "reader_features")
+_STATS = ("stats", "file_stats")
+
+
+def _next_manifest(base: dict | None, operation: dict, **changes) -> dict:
+    """The manifest that follows ``base`` (None: the table's first).
+
+    Every field of ``base`` carries over as a deep copy — pending
+    delete lists, constraints, expectations, generation, the bloom
+    declaration, the column mapping, the quarantine map, the txn
+    ledger — so a commit keeps everything it does not name. Forgetting
+    to carry a field used to resurrect MOR-deleted rows, NULL renamed
+    columns or shed the bloom index (ADVICE r9, the r12 audit); here a
+    commit can only drop a field by saying so. ``version`` is the
+    parent's + 1 and ``operation`` is the audit line; ``changes`` sets
+    the fields the op owns, and a value of None removes the field.
+
+    ``stats``/``file_stats`` are derived from ``parts``: a parent entry
+    survives only while its partition key still points at the same
+    (immutable) dir. Entries the op passes are fresh and layered on
+    top; passing None drops the field."""
+    manifest = {
+        k: copy.deepcopy(v)
+        for k, v in (base or {}).items()
+        if k not in _PER_COMMIT
+    }
+    manifest["version"] = 1 if base is None else int(base["version"]) + 1
+    manifest["operation"] = operation
+    fresh = {f: changes.pop(f) for f in _STATS if f in changes}
+    for k, v in changes.items():
+        if v is None:
+            manifest.pop(k, None)
+        else:
+            manifest[k] = copy.deepcopy(v)
+    # the partition spec is always recorded; None means unpartitioned
+    manifest.setdefault("partition_by", None)
+    parts = manifest["parts"]
+    parent_parts = (base or {}).get("parts", {})
+    for f in _STATS:
+        if f in fresh and fresh[f] is None:
+            manifest.pop(f, None)
+        elif f in manifest or fresh.get(f):
+            kept = {
+                k: v
+                for k, v in manifest.get(f, {}).items()
+                if k in parts and parts[k] == parent_parts.get(k)
+            }
+            manifest[f] = {**kept, **copy.deepcopy(fresh.get(f, {}))}
+    return manifest
 
 
 def _json_native(v):
@@ -572,18 +644,6 @@ def _to_logical(df: DataFrame, m: dict) -> DataFrame:
     return df.select(
         *[F.col(mp.get(f.name, f.name)).alias(f.name) for f in logical.fields]
     )
-
-
-def _carry_mapping(manifest: dict, m: dict | None) -> dict:
-    """column_mapping / retired_physical survive every derived commit,
-    like constraints and the txn ledger."""
-    if m is None:
-        return manifest
-    if m.get("column_mapping"):
-        manifest["column_mapping"] = dict(m["column_mapping"])
-    if m.get("retired_physical"):
-        manifest["retired_physical"] = list(m["retired_physical"])
-    return manifest
 
 
 def read_table(
@@ -1172,80 +1232,48 @@ def _commit_plan(
     ``expectations_audit`` records per-expectation violation counts
     in the operation line (zero-count entries included: the audit
     proves enforcement ran)."""
-    if current is None:
-        manifest = {
-            "version": 1,
-            "partition_by": partition_by,
-            "schema": plan["schema"],
-            "parts": plan["staged"],
-            "operation": {"type": "initial", "touched": sorted(plan["staged"])},
-        }
-        if stats_cols:
-            manifest["stats"] = plan.get("stats_fresh", {})
-            manifest["file_stats"] = plan.get("fstats_fresh", {})
-        if txn is not None:
-            manifest["txns"] = {txn[0]: txn[1]}
-        if plan.get("bloom_cols"):
-            manifest["bloom_cols"] = list(plan["bloom_cols"])
-        _commit(root, manifest, _fault)
-        return
     # Untouched partitions keep their committed dirs; touched ones are
     # re-pointed (or dropped, if every old row was displaced and no
     # update landed there — staged then has no dir for the value, and
     # omitting the key IS the delete).
     new_parts = {
-        k: v for k, v in current["parts"].items() if k not in plan["touched"]
+        k: v
+        for k, v in ({} if current is None else current["parts"]).items()
+        if k not in plan["touched"]
     }
     new_parts.update(plan["staged"])
-    manifest = {
-        "version": int(current["version"]) + 1,
-        "partition_by": partition_by,
-        "schema": plan["schema"],
-        "parts": new_parts,
-        # commit audit line (Delta-style operation info, no extra jobs)
-        "operation": {"type": "merge", "touched": sorted(plan["staged"])},
+    # commit audit line (Delta-style operation info, no extra jobs)
+    operation = {
+        "type": "initial" if current is None else "merge",
+        "touched": sorted(plan["staged"]),
     }
     if expectations_audit:
-        manifest["operation"]["expectations"] = expectations_audit
-    _carry_quarantine(manifest, current)
+        operation["expectations"] = expectations_audit
+    manifest = _next_manifest(
+        current,
+        operation,
+        partition_by=partition_by,
+        schema=plan["schema"],
+        parts=new_parts,
+        # untouched partitions keep their stats; a merge without
+        # stats_cols records none
+        stats=plan.get("stats_fresh", {}) if stats_cols else None,
+        file_stats=plan.get("fstats_fresh", {}) if stats_cols else None,
+        bloom_cols=plan.get("bloom_cols") or (current or {}).get("bloom_cols"),
+        # the plan's mapping is authoritative (it may have minted
+        # physical names for batch-added columns); _can_rebase refuses
+        # to commit a plan across an intervening mapping change, so
+        # plan/current agree
+        column_mapping=plan.get("column_mapping") or None,
+        retired_physical=plan.get("retired_physical") or None,
+    )
     if quarantine:
-        q = dict(manifest.get("quarantine") or {})
-        q[quarantine["rel"]] = {
+        manifest.setdefault("quarantine", {})[quarantine["rel"]] = {
             "version": manifest["version"],
             "count": int(quarantine["count"]),
         }
-        manifest["quarantine"] = q
-    if stats_cols:
-        fresh = plan["staged"]
-        stats = {
-            k: v
-            for k, v in current.get("stats", {}).items()
-            if k in new_parts and k not in fresh  # carry-forward, untouched only
-        }
-        stats.update(plan.get("stats_fresh", {}))
-        manifest["stats"] = stats
-        fstats = {
-            k: v
-            for k, v in current.get("file_stats", {}).items()
-            if k in new_parts and k not in fresh
-        }
-        fstats.update(plan.get("fstats_fresh", {}))
-        manifest["file_stats"] = fstats
-    if current.get("txns") or txn is not None:
-        txns = dict(current.get("txns", {}))
-        if txn is not None:
-            txns[txn[0]] = txn[1]
-        manifest["txns"] = txns
-    _carry_constraints(manifest, current)
-    if plan.get("bloom_cols"):
-        manifest["bloom_cols"] = list(plan["bloom_cols"])
-    # the plan's mapping is authoritative (it may have minted physical
-    # names for batch-added columns); _can_rebase refuses to commit a
-    # plan across an intervening mapping change, so plan/current agree
-    if plan.get("column_mapping"):
-        manifest["column_mapping"] = dict(plan["column_mapping"])
-    if plan.get("retired_physical"):
-        manifest["retired_physical"] = list(plan["retired_physical"])
+    if txn is not None:
+        manifest.setdefault("txns", {})[txn[0]] = txn[1]
     _commit(root, manifest, _fault)
     # Post-commit: superseded dirs are unreferenced garbage. Leave them
     # for vacuum() — deleting here would break a reader that resolved
@@ -1540,38 +1568,7 @@ def compact_partition(
             # tombstones would die with the reorder — discard and retry
             shutil.rmtree(os.path.join(root, new_rel), ignore_errors=True)
             return -1
-        new_parts = dict(current["parts"])
-        new_parts[key] = new_rel
-        manifest = {
-            "version": int(current["version"]) + 1,
-            "partition_by": current.get("partition_by"),
-            "schema": current["schema"],
-            "parts": new_parts,
-            "operation": {"type": "compact", "touched": [key]},
-        }
-        # compaction rewrites RAW files (deleted rows still physically
-        # present), so pending MOR deletes must ride along
-        _carry_deletes(manifest, current)
-        _carry_constraints(manifest, current)
-        _carry_quarantine(manifest, current)
-        _carry_mapping(manifest, current)
-        if "txns" in current:
-            manifest["txns"] = current["txns"]
-        if "stats" in current:
-            manifest["stats"] = current["stats"]
-        if "file_stats" in current:
-            cols = sorted(
-                {
-                    c
-                    for per_file in current["file_stats"].values()
-                    for st in per_file.values()
-                    for c in st
-                }
-            )
-            fstats = {k: v for k, v in current["file_stats"].items() if k != key}
-            fstats.update(_file_stats(root, {key: new_rel}, cols))
-            manifest["file_stats"] = fstats
-        _commit(root, manifest)
+        _commit(root, _compaction_manifest(root, current, key, new_rel))
     spark.catalog.refreshByPath(root)
     return n_files
 
@@ -1683,42 +1680,37 @@ def _compact_partition_locked(
     new_rel = f"{_PARTS}/{key}{marker}-{uuid.uuid4().hex[:8]}"
     os.replace(staging, os.path.join(root, new_rel))
     _bloom_rebuild(spark, root, {key: new_rel}, m)
-    new_parts = dict(m["parts"])
-    new_parts[key] = new_rel
-    manifest = {
-        "version": int(m["version"]) + 1,
-        "partition_by": m.get("partition_by"),
-        "schema": m["schema"],
-        "parts": new_parts,
-        "operation": {"type": "compact", "touched": [key]},
+    _commit(root, _compaction_manifest(root, m, key, new_rel, cluster_by))
+    spark.catalog.refreshByPath(root)
+    return n_files
+
+
+def _compaction_manifest(
+    root: str,
+    m: dict,
+    key: str,
+    new_rel: str,
+    cluster_by: list[str] | None = None,
+) -> dict:
+    """The commit re-pointing ``key`` at its compacted dir ``new_rel``.
+    The row set is unchanged, so everything else carries over: the
+    pending MOR delete files (the compacted dir was rewritten from the
+    RAW scan — MOR-deleted rows are still physically in it) and the
+    partition's dir-level stats. Per-FILE stats are RECOMPUTED for the
+    compacted dir (its files are new) — dropping the key would
+    silently disable footer-granular skipping table-wide after every
+    maintenance pass (ADVICE r4). Columns tracked = whatever the table
+    has been recording, UNIONED with the columns the clustering
+    expressions reference: a cluster_by pass on a table that never
+    recorded file stats must still come out skippable — the disjoint
+    per-file ranges are the entire point of paying the rewrite
+    (ADVICE r10, low)."""
+    fstat_cols = {
+        c
+        for per_file in m.get("file_stats", {}).values()
+        for st in per_file.values()
+        for c in st
     }
-    # the compacted dir was rewritten from the RAW scan — MOR-deleted
-    # rows are still physically in it, so the delete files must ride
-    _carry_deletes(manifest, m)
-    _carry_constraints(manifest, m)
-    _carry_quarantine(manifest, m)
-    _carry_mapping(manifest, m)
-    if "txns" in m:
-        manifest["txns"] = m["txns"]  # exactly-once ledger carries over
-    if "stats" in m:
-        manifest["stats"] = m["stats"]  # row set unchanged -> stats carry over
-    # Carry per-FILE stats for untouched dirs and RECOMPUTE them for
-    # the compacted dir (its files are new) — dropping the key would
-    # silently disable footer-granular skipping table-wide after
-    # every maintenance pass (ADVICE r4). Columns tracked = whatever
-    # the table has been recording, UNIONED with the columns the
-    # clustering expressions reference: a cluster_by pass on a table
-    # that never recorded file stats must still come out skippable —
-    # the disjoint per-file ranges are the entire point of paying the
-    # rewrite (ADVICE r10, low).
-    fstat_cols: set[str] = set()
-    if "file_stats" in m:
-        fstat_cols |= {
-            c
-            for per_file in m["file_stats"].values()
-            for st in per_file.values()
-            for c in st
-        }
     if cluster_by:
         schema_cols = [
             f.name
@@ -1728,16 +1720,15 @@ def _compact_partition_locked(
         fstat_cols |= {
             _phys(m, c) for c in _cluster_stat_cols(cluster_by, schema_cols)
         }
-    if fstat_cols:
-        fstats = {
-            k: v for k, v in m.get("file_stats", {}).items() if k != key
-        }
-        fstats.update(_file_stats(root, {key: new_rel}, sorted(fstat_cols)))
-        if fstats:
-            manifest["file_stats"] = fstats
-    _commit(root, manifest)
-    spark.catalog.refreshByPath(root)
-    return n_files
+    return _next_manifest(
+        m,
+        {"type": "compact", "touched": [key]},
+        parts={**m["parts"], key: new_rel},
+        stats=m.get("stats"),  # row set unchanged -> stats carry over
+        file_stats=_file_stats(root, {key: new_rel}, sorted(fstat_cols))
+        if fstat_cols
+        else {},
+    )
 
 
 def resolve_high_watermark(spark: SparkSession, root: str, cursor_col: str):
@@ -2337,28 +2328,30 @@ def repartition_table(
             df, root, new_partition_by, column_mapping=_mapping(m)
         )
         _bloom_rebuild(spark, root, staged, m)
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": new_partition_by,
-            "schema": m["schema"],
-            "parts": staged,
-            "operation": {"type": "repartition", "touched": sorted(staged)},
-        }
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        _carry_mapping(manifest, m)
-        if "txns" in m:
-            manifest["txns"] = m["txns"]
+        stats = fstats = None
         if stats_cols:
             phys_cols = [_phys(m, c) for c in stats_cols]
-            manifest["stats"] = _collect_stats(
+            stats = _collect_stats(
                 spark, root, staged,
                 None
                 if new_partition_by is None
                 else _phys(m, new_partition_by),
                 phys_cols,
             )
-            manifest["file_stats"] = _file_stats(root, staged, phys_cols)
+            fstats = _file_stats(root, staged, phys_cols)
+        # the rewrite scanned through _read_at, which applied every
+        # pending delete: the new dirs hold none of those rows
+        manifest = _next_manifest(
+            m,
+            {"type": "repartition", "touched": sorted(staged)},
+            partition_by=new_partition_by,
+            parts=staged,
+            stats=stats,
+            file_stats=fstats,
+            deletes=None,
+            delete_keys=None,
+            pos_deletes=None,
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
 
@@ -2396,30 +2389,13 @@ def delete_partitions(
         dropped = sorted(k for k in m["parts"] if k in want)
         if not dropped:
             return []
-        new_parts = {k: v for k, v in m["parts"].items() if k not in want}
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": new_parts,
-            "operation": {"type": "delete_partitions", "touched": dropped},
-        }
         # metadata-only drop: surviving dirs still physically hold any
-        # MOR-deleted rows, so pending delete files must ride along
-        _carry_deletes(manifest, m)
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        _carry_mapping(manifest, m)
-        if "txns" in m:
-            manifest["txns"] = m["txns"]
-        if "stats" in m:
-            manifest["stats"] = {
-                k: v for k, v in m["stats"].items() if k not in want
-            }
-        if "file_stats" in m:
-            manifest["file_stats"] = {
-                k: v for k, v in m["file_stats"].items() if k not in want
-            }
+        # MOR-deleted rows, so pending delete files ride along
+        manifest = _next_manifest(
+            m,
+            {"type": "delete_partitions", "touched": dropped},
+            parts={k: v for k, v in m["parts"].items() if k not in want},
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
         return dropped
@@ -2470,35 +2446,17 @@ def delete_where(spark: SparkSession, root: str, predicate) -> int:
             k: v for k, v in m["parts"].items() if k not in touched_keys
         }
         new_parts.update(staged)  # emptied partitions simply get no dir
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": partition_by,
-            "schema": m["schema"],
-            "parts": new_parts,
-            "operation": {"type": "delete", "touched": sorted(touched_keys)},
-        }
         # only predicate-touched dirs were rewritten (with deletes
         # applied, via _read_at); untouched dirs still hold MOR-deleted
         # rows physically — the delete files stay pending (their
-        # anti-join is a no-op on the rewritten dirs)
-        _carry_deletes(manifest, m)
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        _carry_mapping(manifest, m)
-        if "txns" in m:
-            manifest["txns"] = m["txns"]
-        if "stats" in m:
-            # touched partitions lose their (now stale) stats; readers
-            # conservatively keep dirs without stats
-            manifest["stats"] = {
-                k: v for k, v in m["stats"].items() if k in new_parts and k not in staged
-            }
-        if "file_stats" in m:
-            manifest["file_stats"] = {
-                k: v
-                for k, v in m["file_stats"].items()
-                if k in new_parts and k not in staged
-            }
+        # anti-join is a no-op on the rewritten dirs). Touched
+        # partitions lose their (now stale) stats; readers
+        # conservatively keep dirs without stats
+        manifest = _next_manifest(
+            m,
+            {"type": "delete", "touched": sorted(touched_keys)},
+            parts=new_parts,
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
         return n
@@ -2536,44 +2494,43 @@ def restore_version(spark: SparkSession, root: str, version: int) -> None:
                     f"snapshot v{version} dir {rel} was vacuumed; restore "
                     "requires the target inside the retention window"
                 )
-        manifest = {
-            "version": int(current["version"]) + 1,
-            "partition_by": target.get("partition_by"),
-            "schema": target["schema"],
-            "parts": dict(target["parts"]),
-            "operation": {
+        # The table state comes from the TARGET; everything else (the
+        # exactly-once ledger, constraints, expectations, generation,
+        # the bloom declaration) survives from the current manifest.
+        # - the restored snapshot's LOGICAL rows include its pending
+        #   MOR deletes — restore re-points parts, so it must re-point
+        #   the delete files too or those rows resurrect
+        # - quarantine is TABLE STATE (like parts/deletes): restore
+        #   rewinds it to the target snapshot's capture set — rows
+        #   quarantined after the target version rewind with the
+        #   merges that rejected them, and stay reachable through
+        #   history
+        # - the mapping binds the TARGET's logical schema to its
+        #   physical files, so it restores with the schema; retired
+        #   names are a monotone safety set — union both sides so no
+        #   future re-add can ever bind a physical name either
+        #   snapshot had dropped
+        manifest = _next_manifest(
+            current,
+            {
                 "type": "restore",
                 "touched": sorted(target["parts"]),
                 "restored_version": int(version),
             },
-        }
-        # the restored snapshot's LOGICAL rows include its pending MOR
-        # deletes — restore re-points parts, so it must re-point the
-        # delete files too or those rows resurrect
-        _carry_deletes(manifest, target)
-        _carry_constraints(manifest, current)
-        # quarantine is TABLE STATE (like parts/deletes): restore
-        # rewinds it to the target snapshot's capture set — rows
-        # quarantined after the target version rewind with the merges
-        # that rejected them, and stay reachable through history
-        _carry_quarantine(manifest, target)
-        # the mapping binds the TARGET's logical schema to its physical
-        # files, so it restores with the schema; retired names are a
-        # monotone safety set — union both sides so no future re-add
-        # can ever bind a physical name either snapshot had dropped
-        _carry_mapping(manifest, target)
-        retired_union = sorted(
-            set(current.get("retired_physical") or [])
-            | set(target.get("retired_physical") or [])
+            **{
+                f: target.get(f)
+                for f in (
+                    "partition_by", "schema", "parts", "deletes",
+                    "delete_keys", "pos_deletes", "quarantine",
+                    "column_mapping", *_STATS,
+                )
+            },
+            retired_physical=sorted(
+                set(current.get("retired_physical") or [])
+                | set(target.get("retired_physical") or [])
+            )
+            or None,
         )
-        if retired_union:
-            manifest["retired_physical"] = retired_union
-        if "txns" in current:
-            manifest["txns"] = current["txns"]  # exactly-once ledger survives
-        if "stats" in target:
-            manifest["stats"] = target["stats"]
-        if "file_stats" in target:
-            manifest["file_stats"] = target["file_stats"]
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
 
@@ -2703,30 +2660,11 @@ def update_where(
             k: v for k, v in m["parts"].items() if k not in touched_keys
         }
         new_parts.update(staged)
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": partition_by,
-            "schema": m["schema"],
-            "parts": new_parts,
-            "operation": {"type": "update", "touched": sorted(touched_keys)},
-        }
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        _carry_mapping(manifest, m)
-        if "txns" in m:
-            manifest["txns"] = m["txns"]
-        if "stats" in m:
-            manifest["stats"] = {
-                k: v
-                for k, v in m["stats"].items()
-                if k in new_parts and k not in staged
-            }
-        if "file_stats" in m:
-            manifest["file_stats"] = {
-                k: v
-                for k, v in m["file_stats"].items()
-                if k in new_parts and k not in staged
-            }
+        manifest = _next_manifest(
+            m,
+            {"type": "update", "touched": sorted(touched_keys)},
+            parts=new_parts,
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
         return n
@@ -2758,47 +2696,45 @@ def clone_table(
         raise FileNotFoundError(f"no MANIFEST at {src_root}")
     os.makedirs(dst_root, exist_ok=True)
     src_abs = os.path.abspath(src_root)
-    manifest = {
-        "version": 1,
-        "partition_by": m.get("partition_by"),
-        "schema": m["schema"],
-        "parts": {
-            k: os.path.join(src_abs, rel) for k, rel in m["parts"].items()
-        },
-        "operation": {
+
+    def absolute(rels) -> list[str] | None:
+        # os.path.join keeps an already-absolute rel (a clone of a clone)
+        return [os.path.join(src_abs, rel) for rel in rels or []] or None
+
+    # The clone is a fresh table: its own history starts at version 1
+    # and it has no exactly-once ledger. Everything else travels with
+    # the snapshot:
+    # - CHECK constraints and expectations (its rows passed them at the
+    #   source; future merges into the clone enforce them there);
+    # - by ABSOLUTE path like the parts: the quarantine capture, the
+    #   pending merge-on-read deletes (the clone anti-joins the source's
+    #   delete files until its own apply_deletes materializes them
+    #   copy-on-write) and the positional tombstones (they match on the
+    #   parts/<dir>/<file> SUFFIX of the scanned path, identical whether
+    #   the dir is resolved relative to the source or absolutely) — the
+    #   clone's reads resolve the source's immutable dirs in place.
+    manifest = _next_manifest(
+        m,
+        {
             "type": "clone",
             "source": src_abs,
             "source_version": int(m["version"]),
         },
-    }
-    if "stats" in m:
-        manifest["stats"] = m["stats"]
-    if "file_stats" in m:
-        manifest["file_stats"] = m["file_stats"]
-    # CHECK constraints travel with the clone (its rows passed them at
-    # the source; future merges into the clone enforce them there);
-    # expectations ride in _carry_constraints the same way, and the
-    # quarantine capture travels by ABSOLUTE path like the parts —
-    # the clone's reads resolve the source's immutable dirs in place
-    _carry_constraints(manifest, m)
-    _carry_quarantine(manifest, m, abs_base=src_abs)
-    _carry_mapping(manifest, m)
-    if m.get("deletes"):
-        # pending merge-on-read deletes travel with the snapshot —
-        # the clone anti-joins the source's delete files until its
-        # own apply_deletes materializes them copy-on-write
-        manifest["deletes"] = [
-            os.path.join(src_abs, rel) for rel in m["deletes"]
-        ]
-        manifest["delete_keys"] = list(m["delete_keys"])
-    if m.get("pos_deletes"):
-        # positional tombstones travel too: they match on the
-        # parts/<dir>/<file> SUFFIX of the scanned path, which is
-        # identical whether the dir is resolved relative to the
-        # source or by the clone's absolute-path parts entries
-        manifest["pos_deletes"] = [
-            os.path.join(src_abs, rel) for rel in m["pos_deletes"]
-        ]
+        version=1,
+        txns=None,
+        parts={
+            k: os.path.join(src_abs, rel) for k, rel in m["parts"].items()
+        },
+        stats=m.get("stats"),
+        file_stats=m.get("file_stats"),
+        quarantine={
+            os.path.join(src_abs, rel): info
+            for rel, info in (m.get("quarantine") or {}).items()
+        }
+        or None,
+        deletes=absolute(m.get("deletes")),
+        pos_deletes=absolute(m.get("pos_deletes")),
+    )
     with _writer_lock(dst_root):
         if read_manifest(dst_root) is not None:
             raise ValueError(f"{dst_root} already holds a table")
@@ -2848,69 +2784,6 @@ def _expr_references(expr: str, col: str) -> bool:
 
     no_lit = _re.sub(r"'[^']*'", "''", expr)
     return bool(_re.search(rf"\b{_re.escape(col)}\b", no_lit))
-
-
-
-def _carry_constraints(manifest: dict, m: dict) -> dict:
-    """CHECK constraints survive every derived commit, like the txn
-    ledger (they are administrative metadata, not data — compaction,
-    deletes, restores and repartitions cannot invalidate them because
-    none of those commits introduces rows the constraint has not
-    already passed)."""
-    if m.get("constraints"):
-        manifest["constraints"] = dict(m["constraints"])
-    if m.get("bloom_cols"):
-        # the bloom-index column declaration survives derived commits
-        # the same way; the rewriting op itself is responsible for
-        # rebuilding the rewritten dirs' sidecars (_bloom_rebuild)
-        manifest["bloom_cols"] = list(m["bloom_cols"])
-    if m.get("generation"):
-        # GENERATED ALWAYS AS declarations are administrative metadata
-        # too: derived commits change no row, so the invariant holds
-        manifest["generation"] = dict(m["generation"])
-    if m.get("expectations"):
-        # declarative data-quality expectations (r13) are the same
-        # kind of administrative metadata as constraints: they gate
-        # future merge batches, so every derived commit carries them
-        manifest["expectations"] = {
-            k: dict(v) for k, v in m["expectations"].items()
-        }
-    return manifest
-
-
-def _carry_quarantine(
-    manifest: dict, m: dict | None, abs_base: str | None = None
-) -> dict:
-    """Carry the quarantine relation (r13) — the {rel: {version,
-    count}} map of parquet dirs holding rows REJECTED by
-    policy='quarantine' expectations — from snapshot ``m`` into a
-    derived ``manifest``. Unlike constraints this is DATA-bearing
-    metadata, so it follows the same carrier discipline as the MOR
-    delete lists: every commit that does not deliberately change the
-    quarantine set must re-point it or the captured rows silently
-    vanish (and vacuum would reap the then-orphaned dirs).
-    ``abs_base`` absolutizes the rels (clone_table, whose reader
-    resolves the SOURCE's immutable dirs by absolute path). NOT
-    carried inside _carry_constraints on purpose: clone and restore
-    need this distinction (restore follows the TARGET snapshot, like
-    parts — quarantine is table state, not an append-only ops log).
-
-    No reader feature flag: quarantine rows live OUTSIDE ``parts``,
-    so an engine build that predates the field still reads the main
-    relation correctly and merely cannot see the quarantine."""
-    if m and m.get("quarantine"):
-        q = {k: dict(v) for k, v in m["quarantine"].items()}
-        if abs_base is not None:
-            q = {
-                (
-                    rel
-                    if os.path.isabs(rel)
-                    else os.path.join(abs_base, rel)
-                ): info
-                for rel, info in q.items()
-            }
-        manifest["quarantine"] = q
-    return manifest
 
 
 def _validate_constraints(
@@ -3328,28 +3201,11 @@ def set_expectation(
             F.coalesce(F.expr(expression), F.lit(True))
         ).schema
         exps[name] = {"expr": expression, "policy": policy}
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "expectations": exps,
-            "operation": {
-                "type": "set_expectation",
-                "name": name,
-                "policy": policy,
-            },
-        }
-        _carry_deletes(manifest, m)
-        _carry_mapping(manifest, m)
-        _carry_quarantine(manifest, m)
-        if m.get("constraints"):
-            manifest["constraints"] = dict(m["constraints"])
-        if m.get("bloom_cols"):
-            manifest["bloom_cols"] = list(m["bloom_cols"])
-        for k in ("txns", "generation", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+        manifest = _next_manifest(
+            m,
+            {"type": "set_expectation", "name": name, "policy": policy},
+            expectations=exps,
+        )
         _commit(root, manifest)
 
 
@@ -3365,25 +3221,11 @@ def drop_expectation(root: str, name: str) -> None:
         if name not in exps:
             raise KeyError(f"no expectation {name!r}")
         del exps[name]
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "operation": {"type": "drop_expectation", "name": name},
-        }
-        if exps:
-            manifest["expectations"] = exps
-        _carry_deletes(manifest, m)
-        _carry_mapping(manifest, m)
-        _carry_quarantine(manifest, m)
-        if m.get("constraints"):
-            manifest["constraints"] = dict(m["constraints"])
-        if m.get("bloom_cols"):
-            manifest["bloom_cols"] = list(m["bloom_cols"])
-        for k in ("txns", "generation", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+        manifest = _next_manifest(
+            m,
+            {"type": "drop_expectation", "name": name},
+            expectations=exps or None,
+        )
         _commit(root, manifest)
 
 
@@ -3459,26 +3301,16 @@ def clear_quarantine(root: str, before_version: int | None = None) -> int:
         cleared_rows = sum(int(info["count"]) for info in drop.values())
         if not drop:
             return 0  # nothing in scope: no empty commit
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "operation": {
+        manifest = _next_manifest(
+            m,
+            {
                 "type": "clear_quarantine",
                 "before_version": before_version,
                 "cleared_rels": len(drop),
                 "cleared_rows": cleared_rows,
             },
-        }
-        if keep:
-            manifest["quarantine"] = keep
-        _carry_deletes(manifest, m)
-        _carry_mapping(manifest, m)
-        _carry_constraints(manifest, m)
-        for k in ("txns", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+            quarantine=keep or None,
+        )
         _commit(root, manifest)
         return cleared_rows
 
@@ -3505,30 +3337,11 @@ def add_constraint(
         _validate_constraints(
             _read_at(spark, root, m), {name: expression}, "add_constraint"
         )
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "constraints": {**existing, name: expression},
-            "operation": {"type": "add_constraint", "name": name},
-        }
-        _carry_deletes(manifest, m)
-        # metadata-only commit: the column mapping and the bloom-index
-        # declaration MUST ride along — omitting the mapping makes
-        # every renamed column read NULL from the physical files
-        # (r12 audit fix)
-        _carry_mapping(manifest, m)
-        if m.get("bloom_cols"):
-            manifest["bloom_cols"] = list(m["bloom_cols"])
-        if m.get("expectations"):
-            manifest["expectations"] = {
-                k: dict(v) for k, v in m["expectations"].items()
-            }
-        _carry_quarantine(manifest, m)
-        for k in ("txns", "generation", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+        manifest = _next_manifest(
+            m,
+            {"type": "add_constraint", "name": name},
+            constraints={**existing, name: expression},
+        )
         _commit(root, manifest)
 
 
@@ -3579,21 +3392,11 @@ def set_generation_expr(
                 f"set_generation_expr: existing rows violate "
                 f"{col} = {expr}; nothing was committed"
             )
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "operation": {"type": "set_generation", "column": col},
-        }
-        _carry_deletes(manifest, m)
-        _carry_mapping(manifest, m)
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        manifest["generation"] = {**gen, col: expr}
-        for k in ("txns", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+        manifest = _next_manifest(
+            m,
+            {"type": "set_generation", "column": col},
+            generation={**gen, col: expr},
+        )
         _commit(root, manifest)
 
 
@@ -3608,24 +3411,11 @@ def drop_generation_expr(root: str, col: str) -> None:
         if col not in gen:
             raise KeyError(f"no generation expression on {col!r}")
         gen.pop(col)
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "operation": {"type": "drop_generation", "column": col},
-        }
-        _carry_deletes(manifest, m)
-        _carry_mapping(manifest, m)
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        if gen:
-            manifest["generation"] = gen
-        else:
-            manifest.pop("generation", None)
-        for k in ("txns", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+        manifest = _next_manifest(
+            m,
+            {"type": "drop_generation", "column": col},
+            generation=gen or None,
+        )
         _commit(root, manifest)
 
 
@@ -3639,27 +3429,11 @@ def drop_constraint(root: str, name: str) -> None:
         if name not in existing:
             raise KeyError(f"no constraint {name!r}")
         existing.pop(name)
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "operation": {"type": "drop_constraint", "name": name},
-        }
-        if existing:
-            manifest["constraints"] = existing
-        _carry_deletes(manifest, m)
-        _carry_mapping(manifest, m)  # r12 audit fix (see add_constraint)
-        if m.get("bloom_cols"):
-            manifest["bloom_cols"] = list(m["bloom_cols"])
-        if m.get("expectations"):
-            manifest["expectations"] = {
-                k: dict(v) for k, v in m["expectations"].items()
-            }
-        _carry_quarantine(manifest, m)
-        for k in ("txns", "generation", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+        manifest = _next_manifest(
+            m,
+            {"type": "drop_constraint", "name": name},
+            constraints=existing or None,
+        )
         _commit(root, manifest)
 
 
@@ -3722,62 +3496,43 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> None:
                 for f in schema.fields
             ]
         )
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": (
-                new if m.get("partition_by") == old else m.get("partition_by")
+        # Everything keyed by PHYSICAL name or by dir carries over
+        # untouched: stats, bloom_cols, retired names, delete files,
+        # positional tombstones and the quarantine capture. What names
+        # LOGICAL columns follows the rename: the partition spec, the
+        # pending delete keys, and the constraint, generation and
+        # expectation SQL (identifier rewrite, literal-safe) —
+        # generation also rekeys the declared column itself.
+        renamed = {old: new}
+        manifest = _next_manifest(
+            m,
+            {"type": "rename_column", "from": old, "to": new},
+            partition_by=renamed.get(
+                m.get("partition_by"), m.get("partition_by")
             ),
-            "schema": new_schema.json(),
-            "parts": dict(m["parts"]),
-            "operation": {"type": "rename_column", "from": old, "to": new},
-        }
-        if mapping:
-            manifest["column_mapping"] = mapping
-        if m.get("retired_physical"):
-            manifest["retired_physical"] = list(m["retired_physical"])
-        if m.get("constraints"):
-            manifest["constraints"] = {
-                name: _rename_idents_in_expr(e, {old: new})
-                for name, e in m["constraints"].items()
+            schema=new_schema.json(),
+            column_mapping=mapping or None,
+            delete_keys=[renamed.get(k, k) for k in m.get("delete_keys") or []]
+            or None,
+            constraints={
+                name: _rename_idents_in_expr(e, renamed)
+                for name, e in (m.get("constraints") or {}).items()
             }
-        if m.get("generation"):
-            # generation exprs are over LOGICAL names: rewrite the
-            # identifiers AND the declared column's own key
-            manifest["generation"] = {
-                (new if c == old else c): _rename_idents_in_expr(
-                    e, {old: new}
-                )
-                for c, e in m["generation"].items()
+            or None,
+            generation={
+                renamed.get(c, c): _rename_idents_in_expr(e, renamed)
+                for c, e in (m.get("generation") or {}).items()
             }
-        if m.get("deletes"):
-            manifest["deletes"] = list(m["deletes"])
-            manifest["delete_keys"] = [
-                new if k == old else k for k in m["delete_keys"]
-            ]
-        if m.get("pos_deletes"):
-            # positional tombstones reference files, not columns —
-            # a rename carries them untouched
-            manifest["pos_deletes"] = list(m["pos_deletes"])
-        if m.get("expectations"):
-            # expectation exprs are over LOGICAL names, like
-            # constraints: rewrite identifiers (literal-safe)
-            manifest["expectations"] = {
-                name: {**spec, "expr": _rename_idents_in_expr(
-                    spec["expr"], {old: new}
-                )}
-                for name, spec in m["expectations"].items()
+            or None,
+            expectations={
+                name: {
+                    **spec,
+                    "expr": _rename_idents_in_expr(spec["expr"], renamed),
+                }
+                for name, spec in (m.get("expectations") or {}).items()
             }
-        # the quarantine capture is immutable batch data keyed by dir,
-        # not by column names — a rename carries it untouched
-        _carry_quarantine(manifest, m)
-        if m.get("bloom_cols"):
-            # bloom_cols are PHYSICAL names: renames never touch them
-            # (r12 audit fix — dropping the list silently disabled the
-            # standing bloom index after any rename)
-            manifest["bloom_cols"] = list(m["bloom_cols"])
-        for k in ("txns", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+            or None,
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
 
@@ -3831,69 +3586,24 @@ def drop_column(spark: SparkSession, root: str, name: str) -> None:
         phys = mapping.pop(name, name)
         retired = sorted(set(m.get("retired_physical") or []) | {phys})
         new_schema = StructType([f for f in schema.fields if f.name != name])
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": new_schema.json(),
-            "parts": dict(m["parts"]),
-            "retired_physical": retired,
-            "operation": {"type": "drop_column", "name": name},
-        }
-        if mapping:
-            manifest["column_mapping"] = mapping
-        _carry_deletes(manifest, m)
-        if m.get("constraints"):
-            manifest["constraints"] = dict(m["constraints"])
-        if m.get("bloom_cols"):
-            # physical names; the dropped column's filter entries are
-            # simply never consulted again (r12 audit fix)
-            manifest["bloom_cols"] = list(m["bloom_cols"])
-        gen = {
-            c: e for c, e in (m.get("generation") or {}).items() if c != name
-        }
-        if gen:
+        # bloom_cols are physical names; the dropped column's filter
+        # entries are simply never consulted again
+        manifest = _next_manifest(
+            m,
+            {"type": "drop_column", "name": name},
+            schema=new_schema.json(),
+            retired_physical=retired,
+            column_mapping=mapping or None,
             # dropping a generated column drops its declaration with it
-            manifest["generation"] = gen
-        if m.get("expectations"):
-            manifest["expectations"] = {
-                k: dict(v) for k, v in m["expectations"].items()
+            generation={
+                c: e
+                for c, e in (m.get("generation") or {}).items()
+                if c != name
             }
-        _carry_quarantine(manifest, m)
-        for k in ("txns", "stats", "file_stats"):
-            if k in m:
-                manifest[k] = m[k]
+            or None,
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
-
-
-def _carry_deletes(manifest: dict, m: dict) -> dict:
-    """Carry pending merge-on-read delete files from snapshot ``m``
-    into a derived ``manifest``. Required for every commit that does
-    NOT materialize the deletes (compaction, metadata partition
-    drops, copy-on-write deletes of OTHER rows, restore): the
-    equality anti-join is valid on any physical layout of the same
-    logical rows, while OMITTING the list would resurrect every
-    MOR-deleted row still physically present in the dirs the commit
-    did not rewrite — and the then-orphaned delete files would be
-    vacuumed (ADVICE r9, high).
-
-    POSITIONAL delete files (r12) ride along under a STRICTER rule:
-    a (file, row_index) tuple is only valid while that exact file is
-    referenced, so carrying is correct ONLY for commits that either
-    touch no data file (metadata ops: restore, constraints, renames,
-    partition drops) or whose rewriting scan already APPLIED the
-    positional deletes (_read_at does since r12 — delete_where /
-    repartition_table materialize them for the dirs they rewrite;
-    entries pointing at superseded rels then match nothing, entries
-    for untouched rels stay exact). Raw-scan rewriters that cannot
-    guarantee that (compact_partition, apply_deletes) REFUSE while
-    positional deletes are pending instead of carrying a lie."""
-    if m.get("deletes"):
-        manifest["deletes"] = list(m["deletes"])
-        manifest["delete_keys"] = list(m["delete_keys"])
-    if m.get("pos_deletes"):
-        manifest["pos_deletes"] = list(m["pos_deletes"])
-    return manifest
 
 
 def _apply_delete_files(
@@ -4079,22 +3789,11 @@ def delete_where_pos(
         staging = os.path.join(root, f".staging-{uuid.uuid4().hex[:8]}")
         matches.coalesce(1).write.mode("overwrite").parquet(staging)
         os.replace(staging, os.path.join(root, rel))
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "pos_deletes": list(m.get("pos_deletes", [])) + [rel],
-            "operation": {"type": "delete_pos", "n_rows": int(n)},
-        }
-        if m.get("deletes"):
-            manifest["deletes"] = list(m["deletes"])
-            manifest["delete_keys"] = list(m["delete_keys"])
-        _carry_mapping(manifest, m)
-        _carry_quarantine(manifest, m)
-        for carry in ("txns", "constraints", "expectations", "bloom_cols", "generation", "stats", "file_stats"):
-            if carry in m:
-                manifest[carry] = m[carry]
+        manifest = _next_manifest(
+            m,
+            {"type": "delete_pos", "n_rows": int(n)},
+            pos_deletes=list(m.get("pos_deletes", [])) + [rel],
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
         return int(n)
@@ -4160,35 +3859,19 @@ def apply_pos_deletes(spark: SparkSession, root: str, _fault=None) -> int:
             k: v for k, v in m["parts"].items() if k not in touched_keys
         }
         new_parts.update(staged)
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": partition_by,
-            "schema": m["schema"],
-            "parts": new_parts,
-            "operation": {
+        # equality deletes (if also pending) stay pending: the rewrite
+        # above applied them only to the dirs it touched
+        manifest = _next_manifest(
+            m,
+            {
                 "type": "apply_pos_deletes",
                 "touched": sorted(touched_keys),
                 "n_rows": int(n),
                 "n_delete_files": len(rels),
             },
-        }
-        # equality deletes (if also pending) stay pending: the rewrite
-        # above applied them only to the dirs it touched
-        if m.get("deletes"):
-            manifest["deletes"] = list(m["deletes"])
-            manifest["delete_keys"] = list(m["delete_keys"])
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        _carry_mapping(manifest, m)
-        if "txns" in m:
-            manifest["txns"] = m["txns"]
-        for stat_key in ("stats", "file_stats"):
-            if stat_key in m:
-                manifest[stat_key] = {
-                    k: v
-                    for k, v in m[stat_key].items()
-                    if k in new_parts and k not in staged
-                }
+            parts=new_parts,
+            pos_deletes=None,
+        )
         _commit(root, manifest, _fault)
         spark.catalog.refreshByPath(root)
         return int(n)
@@ -4272,24 +3955,14 @@ def delete_where_mor(
         staging = os.path.join(root, f".staging-{uuid.uuid4().hex[:8]}")
         matches.coalesce(1).write.mode("overwrite").parquet(staging)
         os.replace(staging, os.path.join(root, rel))
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": m.get("partition_by"),
-            "schema": m["schema"],
-            "parts": dict(m["parts"]),
-            "deletes": list(m.get("deletes", [])) + [rel],
-            "delete_keys": list(keys),
-            "operation": {"type": "delete_mor", "n_keys": int(n)},
-        }
-        if m.get("pos_deletes"):
-            # both tombstone kinds may be pending at once; no data file
-            # changed, so positional coordinates stay exact
-            manifest["pos_deletes"] = list(m["pos_deletes"])
-        _carry_mapping(manifest, m)
-        _carry_quarantine(manifest, m)
-        for carry in ("txns", "constraints", "expectations", "bloom_cols", "generation", "stats", "file_stats"):
-            if carry in m:
-                manifest[carry] = m[carry]
+        # both tombstone kinds may be pending at once; no data file
+        # changed, so positional coordinates stay exact
+        manifest = _next_manifest(
+            m,
+            {"type": "delete_mor", "n_keys": int(n)},
+            deletes=list(m.get("deletes", [])) + [rel],
+            delete_keys=list(keys),
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
         return int(n)
@@ -4358,35 +4031,18 @@ def apply_deletes(
             k: v for k, v in m["parts"].items() if k not in touched_keys
         }
         new_parts.update(staged)
-        manifest = {
-            "version": int(m["version"]) + 1,
-            "partition_by": partition_by,
-            "schema": m["schema"],
-            "parts": new_parts,
-            "operation": {
+        manifest = _next_manifest(
+            m,
+            {
                 "type": "apply_deletes",
                 "touched": sorted(touched_keys),
                 "n_rows": int(n),
                 "n_delete_files": len(rels),
             },
-        }
-        _carry_constraints(manifest, m)
-        _carry_quarantine(manifest, m)
-        _carry_mapping(manifest, m)
-        if "txns" in m:
-            manifest["txns"] = m["txns"]
-        if "stats" in m:
-            manifest["stats"] = {
-                k: v
-                for k, v in m["stats"].items()
-                if k in new_parts and k not in staged
-            }
-        if "file_stats" in m:
-            manifest["file_stats"] = {
-                k: v
-                for k, v in m["file_stats"].items()
-                if k in new_parts and k not in staged
-            }
+            parts=new_parts,
+            deletes=None,
+            delete_keys=None,
+        )
         _commit(root, manifest)
         spark.catalog.refreshByPath(root)
         return int(n)

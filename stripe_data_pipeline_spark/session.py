@@ -52,18 +52,6 @@ def get_spark(
         # queries. Default is 30min — far too lazy for local mode.
         .config("spark.cleaner.periodicGC.interval", "1min")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # r14 optimization round A/B knobs (guide §9): join-strategy
-        # preference and shuffle codec, env-parameterised so the same
-        # binary can be measured both ways on any box; defaults hold
-        # the measured-better value (see OPTIMIZATION_r14.md §config).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

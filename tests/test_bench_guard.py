@@ -64,13 +64,24 @@ def test_sf1_baseline_pins_exist_for_spot_queries():
 def test_detail_artifact_path_targets_next_round(tmp_path):
     """VERDICT r6 #5: the full per-query detail ships as a file named
     for the round the driver is about to record."""
-    assert bench.detail_artifact_path(str(tmp_path)).endswith(
-        "bench_detail_r01.json"
+    assert bench.detail_artifact_path(32, str(tmp_path)).endswith(
+        "bench_detail_r01.cpus32.json"
     )
     (tmp_path / "BENCH_r06.json").write_text("{}")
-    assert bench.detail_artifact_path(str(tmp_path)).endswith(
-        "bench_detail_r07.json"
+    assert bench.detail_artifact_path(32, str(tmp_path)).endswith(
+        "bench_detail_r07.cpus32.json"
     )
+
+
+def test_detail_artifact_path_keyed_by_cpus(tmp_path):
+    """Two core counts in one round get two files: a low-core probe
+    must not overwrite the headline run's detail."""
+    (tmp_path / "BENCH_r15.json").write_text("{}")
+    probe = bench.detail_artifact_path(8, str(tmp_path))
+    headline = bench.detail_artifact_path(32, str(tmp_path))
+    assert probe != headline
+    assert probe.endswith("bench_detail_r16.cpus8.json")
+    assert headline.endswith("bench_detail_r16.cpus32.json")
 
 
 def test_summary_line_fits_driver_tail_budget():

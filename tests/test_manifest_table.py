@@ -1255,3 +1255,317 @@ def test_reader_feature_flags_recorded_and_enforced(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="quantum-deletes"):
         MT.read_manifest(root)
+
+
+# ---------------------------------------------------------------------------
+# Field ownership: every commit derives its manifest from the parent, so a
+# field an op does not own must come through unchanged. The table below
+# names, per op, the fields it may change; every other field of the parent
+# (pending deletes, declarations, mapping, quarantine, ledger, stats) must
+# be equal in the child.
+# ---------------------------------------------------------------------------
+
+_PER_COMMIT = {"version", "operation", "committed_at_ms", "reader_features"}
+_OPTIONAL = {
+    "constraints", "bloom_cols", "generation", "expectations", "quarantine",
+    "column_mapping", "retired_physical", "txns", "stats", "file_stats",
+}
+_STATE = {"parts", "stats", "file_stats"}  # a data rewrite re-points these
+
+
+def _full_row(i, day, v):
+    # id, day, v, v2 (generated: v * 2), w (= id * 10), extra (renamed
+    # to extra2 below), dropme (dropped below)
+    return (i, day, v, v * 2, i * 10, i, i)
+
+
+_FULL_SCHEMA = (
+    "id long, day string, v double, v2 double, w long, extra long, "
+    "dropme long"
+)
+
+
+@pytest.fixture(scope="module")
+def full_tables(spark, tmp_path_factory):
+    """Three snapshots of one table with every optional manifest field
+    set: "plain" (no pending deletes), "eq" (+ equality deletes) and
+    "all" (+ positional deletes). Each op runs on a copy of the richest
+    snapshot it accepts."""
+    import shutil
+
+    import pyspark.sql.functions as F2
+
+    base = tmp_path_factory.mktemp("full")
+    root = str(base / "all")
+    rows = [
+        _full_row(i, day, float(i))
+        for i, day in [(1, "a"), (2, "a"), (3, "b"), (4, "b"), (5, "c"),
+                       (6, "c")]
+    ]
+    MT.merge_upsert_atomic(
+        spark, root, spark.createDataFrame(rows, _FULL_SCHEMA),
+        keys=["id"], partition_by="day", stats_cols=["v"],
+        bloom_cols=["id"], txn_app="app", txn_version=1,
+    )
+    MT.set_generation_expr(spark, root, "v2", "v * 2")
+    MT.add_constraint(spark, root, "v_pos", "v > 0")
+    MT.set_expectation(spark, root, "v_small", "v < 1000")
+    batch = spark.createDataFrame(
+        [(7, "c", 7.0, 70, 7, 7), (8, "c", 5000.0, 80, 8, 8)],
+        "id long, day string, v double, w long, extra long, dropme long",
+    )
+    MT.merge_upsert_atomic(
+        spark, root, batch, keys=["id"], partition_by="day",
+        stats_cols=["v"], txn_app="app", txn_version=2,
+    )
+    MT.rename_column(spark, root, "extra", "extra2")
+    MT.drop_column(spark, root, "dropme")
+    snaps = {}
+    snaps["plain"] = str(base / "plain")
+    shutil.copytree(root, snaps["plain"])
+    MT.delete_where_mor(spark, root, F2.col("id") == 1, keys=["id"])
+    snaps["eq"] = str(base / "eq")
+    shutil.copytree(root, snaps["eq"])
+    MT.delete_where_pos(spark, root, F2.col("id") == 5)
+    snaps["all"] = root
+    m = MT.read_manifest(root)
+    assert _OPTIONAL | {"deletes", "delete_keys", "pos_deletes"} <= set(m)
+    assert m["quarantine"] and m["column_mapping"] and m["retired_physical"]
+    return snaps
+
+
+def _op_merge(spark, root):
+    batch = spark.createDataFrame(
+        [(3, "b", 30.0, 30, 3), (9, "d", 9.0, 90, 9)],
+        "id long, day string, v double, w long, extra2 long",
+    )
+    MT.merge_upsert_atomic(
+        spark, root, batch, keys=["id"], partition_by="day",
+        stats_cols=["v"], txn_app="app", txn_version=3,
+    )
+
+
+def _op_restore(spark, root):
+    MT.restore_version(spark, root, 2)  # before expectations and rename
+
+
+def _op_clone(spark, root):
+    MT.clone_table(root, root + "_clone")
+
+
+def _ops():
+    import pyspark.sql.functions as F2
+
+    merge_fields = _STATE | {
+        "schema", "partition_by", "txns", "quarantine", "column_mapping",
+        "retired_physical", "bloom_cols",
+    }
+    return {
+        "merge_upsert_atomic": ("plain", _op_merge, merge_fields),
+        "compact_partition": (
+            "eq",
+            lambda s, r: MT.compact_partition(
+                s, r, "a", target_rows_per_file=1
+            ),
+            _STATE,
+        ),
+        "compact_partition_occ": (
+            "eq",
+            lambda s, r: MT.compact_partition(
+                s, r, "a", target_rows_per_file=1, concurrency="occ"
+            ),
+            _STATE,
+        ),
+        "repartition_table": (
+            "all",
+            lambda s, r: MT.repartition_table(s, r, None, stats_cols=["v"]),
+            _STATE | {"partition_by", "deletes", "delete_keys",
+                      "pos_deletes"},
+        ),
+        "delete_partitions": (
+            "all", lambda s, r: MT.delete_partitions(s, r, ["b"]), _STATE
+        ),
+        "delete_where": (
+            "all",
+            lambda s, r: MT.delete_where(s, r, F2.col("id") == 3),
+            _STATE,
+        ),
+        "restore_version": (
+            "all",
+            _op_restore,
+            _STATE | {"partition_by", "schema", "deletes", "delete_keys",
+                      "pos_deletes", "quarantine", "column_mapping",
+                      "retired_physical"},
+        ),
+        "update_where": (
+            "plain",
+            lambda s, r: MT.update_where(
+                s, r, F2.col("id") == 3, {"v": F2.lit(33.0)}
+            ),
+            _STATE,
+        ),
+        "clone_table": (
+            "all",
+            _op_clone,
+            {"parts", "deletes", "pos_deletes", "quarantine", "txns"},
+        ),
+        "set_expectation": (
+            "all",
+            lambda s, r: MT.set_expectation(s, r, "w_pos", "w > 0"),
+            {"expectations"},
+        ),
+        "drop_expectation": (
+            "all",
+            lambda s, r: MT.drop_expectation(r, "v_small"),
+            {"expectations"},
+        ),
+        "clear_quarantine": (
+            "all", lambda s, r: MT.clear_quarantine(r), {"quarantine"}
+        ),
+        "add_constraint": (
+            "all",
+            lambda s, r: MT.add_constraint(s, r, "id_pos", "id > 0"),
+            {"constraints"},
+        ),
+        "drop_constraint": (
+            "all", lambda s, r: MT.drop_constraint(r, "v_pos"),
+            {"constraints"},
+        ),
+        "set_generation_expr": (
+            "all",
+            lambda s, r: MT.set_generation_expr(s, r, "w", "id * 10"),
+            {"generation"},
+        ),
+        "drop_generation_expr": (
+            "all", lambda s, r: MT.drop_generation_expr(r, "v2"),
+            {"generation"},
+        ),
+        "rename_column": (
+            "all",
+            lambda s, r: MT.rename_column(s, r, "w", "w_renamed"),
+            {"schema", "column_mapping", "partition_by", "delete_keys",
+             "constraints", "generation", "expectations"},
+        ),
+        "drop_column": (
+            "all",
+            lambda s, r: MT.drop_column(s, r, "w"),
+            {"schema", "retired_physical", "column_mapping", "generation"},
+        ),
+        "delete_where_pos": (
+            "all",
+            lambda s, r: MT.delete_where_pos(s, r, F2.col("id") == 6),
+            {"pos_deletes"},
+        ),
+        "apply_pos_deletes": (
+            "all",
+            lambda s, r: MT.apply_pos_deletes(s, r),
+            _STATE | {"pos_deletes"},
+        ),
+        "delete_where_mor": (
+            "all",
+            lambda s, r: MT.delete_where_mor(
+                s, r, F2.col("id") == 2, keys=["id"]
+            ),
+            {"deletes", "delete_keys"},
+        ),
+        "apply_deletes": (
+            "eq",
+            lambda s, r: MT.apply_deletes(s, r),
+            _STATE | {"deletes", "delete_keys"},
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_ops()))
+def test_commit_keeps_every_field_it_does_not_own(
+    spark, tmp_path, full_tables, op
+):
+    import shutil
+
+    snap, run, owned = _ops()[op]
+    root = str(tmp_path / "t")
+    shutil.copytree(full_tables[snap], root)
+    parent = MT.read_manifest(root)
+    run(spark, root)
+    child = MT.read_manifest(root + "_clone" if op == "clone_table" else root)
+    assert child["version"] == (
+        1 if op == "clone_table" else parent["version"] + 1
+    )
+    missing = object()
+    changed = sorted(
+        k
+        for k in (set(parent) | set(child)) - _PER_COMMIT - owned
+        if parent.get(k, missing) != child.get(k, missing)
+    )
+    assert changed == [], f"{op} changed fields it does not own: {changed}"
+
+
+def test_every_commit_derives_from_next_manifest():
+    """Structural guard: every manifest that reaches ``_commit`` is built
+    by ``_next_manifest`` (directly or through a helper that returns
+    one), and no other code builds a manifest-shaped dict literal. The
+    read-only ``history``/``table_detail`` reports, and the quarantine
+    capture record ({version, count}), are the only dicts with a
+    ``"version"`` key."""
+    import ast
+    import inspect
+
+    src = inspect.getsource(MT)
+    assert "_carry_" not in src
+    tree = ast.parse(src)
+    funcs = {
+        n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)
+    }
+
+    def calls(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == name
+        )
+
+    builders = {"_next_manifest"}
+    grew = True
+    while grew:  # helpers whose every return is a builder call
+        grew = False
+        for name, fn in funcs.items():
+            rets = [n for n in ast.walk(fn) if isinstance(n, ast.Return)]
+            if name not in builders and rets and all(
+                any(calls(r.value, b) for b in builders) for r in rets
+            ):
+                builders.add(name)
+                grew = True
+
+    n_commits = 0
+    for name, fn in funcs.items():
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Dict) and any(
+                isinstance(k, ast.Constant) and k.value == "version"
+                for k in node.keys
+            ):
+                keys = {
+                    k.value for k in node.keys if isinstance(k, ast.Constant)
+                }
+                assert name in ("history", "table_detail") or keys == {
+                    "version", "count"
+                }, f"{name} builds a manifest-shaped dict literal"
+            if not calls(node, "_commit") or name == "_commit":
+                continue
+            n_commits += 1
+            arg = node.args[1]
+            if isinstance(arg, ast.Name):
+                sources = [
+                    a.value
+                    for a in ast.walk(fn)
+                    if isinstance(a, ast.Assign)
+                    and any(
+                        isinstance(t, ast.Name) and t.id == arg.id
+                        for t in a.targets
+                    )
+                ]
+            else:
+                sources = [arg]
+            assert sources and all(
+                any(calls(v, b) for b in builders) for v in sources
+            ), f"{name} commits a manifest not built by _next_manifest"
+    assert n_commits >= 21
