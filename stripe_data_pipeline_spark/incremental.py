@@ -10,10 +10,16 @@ Spark-first mapping:
 - high-watermark: engine-level (not Catalyst) — resolve MAX(cursor)
   from the target, inject a filter on the source; with date-partitioned
   targets the filter prunes partitions for free.
-- merge sink: an anti-join + union rewrite over plain parquet. On a
-  partitioned target it rewrites only the partitions the update batch
-  touches (the dynamic-partition-overwrite strategy), staging to a
-  sibling directory and swapping the touched partition dirs. The swap
+- merge sink: an anti-join + union rewrite over plain parquet. Old
+  rows matching ``scope`` (default: the update keys) are removed, then
+  the updates land. ``plans.pipeline`` feeds it only each layer's
+  change set and scopes the line-item and mart merges to the changed
+  invoices, so a daily drop rewrites what it changed and merged =
+  backfill of the final state; an identical re-run never calls it. On
+  a partitioned target it rewrites only the partitions the update
+  batch or the scoped old rows touch (the dynamic-partition-overwrite
+  strategy), staging to a sibling directory and swapping the touched
+  partition dirs. The swap
   is idempotent but NOT crash-atomic — for the reference's full
   BigQuery-MERGE durability guarantee (README.md:110-129) use
   ``manifest_table.merge_upsert_atomic``: identical semantics,
@@ -73,18 +79,36 @@ def _spark_partition_dir_value(spark: SparkSession, v) -> str:
         return raw
 
 
+def table_exists(path: str) -> bool:
+    """Has a write landed a parquet table at ``path``?"""
+    return os.path.exists(path) and any(
+        f.endswith(".parquet") or f.startswith(("part-", "_SUCCESS"))
+        for _, _, files in os.walk(path)
+        for f in files
+    )
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
     updates: DataFrame,
     keys: list[str],
     partition_by: str | None = None,
+    scope: DataFrame | None = None,
 ) -> None:
     """S6: upsert ``updates`` into ``target_path`` by composite key.
 
     Matched rows are replaced, unmatched inserted — the dbt
     incremental 'merge' strategy. Composite keys supported
     (deferred_revenue.sql:3 uses [line_item_id, as_of_date]).
+
+    ``scope`` is a DataFrame of key values: every old row that matches
+    it on its columns is removed before the updates land. It defaults
+    to the updates' ``keys``; a wider scope (the pipeline passes the
+    changed ``invoice_id``s to the line-item and mart merges) also
+    removes rows the updates no longer carry — a line that vanished or
+    a service day that a shortened period lost. Every update row must
+    fall inside ``scope``.
 
     Implementation is the plain-parquet strategy (anti-join + union +
     staging swap, partition-scoped when partitioned). On a deployment
@@ -93,12 +117,7 @@ def merge_upsert(
     — the call sites and semantics (verified by tests/test_incremental.py)
     are format-agnostic by design.
     """
-    exists = os.path.exists(target_path) and any(
-        f.endswith(".parquet") or f.startswith(("part-", "_SUCCESS"))
-        for _, _, files in os.walk(target_path)
-        for f in files
-    )
-    if not exists:
+    if not table_exists(target_path):
         writer = updates.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
@@ -106,22 +125,26 @@ def merge_upsert(
         return
 
     old = spark.read.parquet(target_path)
+    if scope is None:
+        scope = updates.select(*keys).distinct()
+    # a USING join moves the join columns to the front: keep the
+    # table's own column order
+    on = scope.columns
 
     if partition_by:
         # Rewrite only partitions touched by the update batch — but match
         # keys GLOBALLY, like the reference's MERGE: an update that moves a
         # key to a new partition value must also displace the stale row
         # from its old partition, so touched = partitions of the updates
-        # UNION partitions of old rows whose key is being updated. One
-        # collect for both sets; the semi join is left to AQE (it will
-        # broadcast update_keys when the batch is small — no unconditional
-        # driver-side broadcast of an unbounded key set).
-        update_keys = updates.select(*keys).distinct()
+        # UNION partitions of old rows inside ``scope``. One collect for
+        # both sets; the semi join is left to AQE (it will broadcast the
+        # scope when it is small — no unconditional driver-side
+        # broadcast of an unbounded key set).
         part_vals = {
             r[0]
             for r in updates.select(F.col(partition_by).alias("pv"))
             .unionByName(
-                old.join(update_keys, keys, "left_semi").select(
+                old.join(scope, on, "left_semi").select(
                     F.col(partition_by).alias("pv")
                 )
             )
@@ -136,7 +159,7 @@ def merge_upsert(
         if None in part_vals:
             cond = cond | F.col(partition_by).isNull()
         old_touched = old.filter(cond)
-        kept = old_touched.join(update_keys, keys, "left_anti")
+        kept = old_touched.join(scope, on, "left_anti").select(*old.columns)
         merged = kept.unionByName(updates)
         staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").partitionBy(partition_by).parquet(staging)
@@ -167,7 +190,7 @@ def merge_upsert(
                 shutil.rmtree(os.path.join(target_path, part_dir), ignore_errors=True)
         shutil.rmtree(staging, ignore_errors=True)
     else:
-        kept = old.join(updates.select(*keys), keys, "left_anti")
+        kept = old.join(scope, on, "left_anti").select(*old.columns)
         merged = kept.unionByName(updates)
         staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").parquet(staging)

@@ -841,11 +841,14 @@ def merge_upsert_atomic(
     max_retries: int = 3,
     txn_app: str | None = None,
     txn_version: int | None = None,
+    scope: DataFrame | None = None,
 ) -> None:
     """Crash-atomic S6 MERGE: same semantics as ``merge_upsert``
     (matched rows replaced, unmatched inserted, global key matching —
     an update that moves a key's partition value displaces the stale
     row from its old partition), committed by one manifest rename.
+    ``scope`` is ``merge_upsert``'s: the key values whose old rows are
+    removed before the updates land (default: the updates' ``keys``).
 
     Crash at ANY point leaves MANIFEST referencing only complete,
     immutable directories — readers see the whole old or the whole new
@@ -968,7 +971,7 @@ def merge_upsert_atomic(
             with _writer_lock(root):
                 _merge_upsert_atomic_locked(
                     spark, root, updates, keys, partition_by, stats_cols,
-                    _fault,
+                    _fault, scope=scope,
                     txn=txn, validated_constraints=_validated_cons,
                     bloom_cols=bloom_cols, validated_generation=_gen0,
                     quarantine=_qinfo, expectations_audit=_exp_audit,
@@ -988,7 +991,7 @@ def merge_upsert_atomic(
         base = read_manifest(root)
         plan = _plan_merge(
             spark, root, base, updates, keys, partition_by, stats_cols, _fault,
-            bloom_cols=bloom_cols,
+            bloom_cols=bloom_cols, scope=scope,
         )
         try:
             with _writer_lock(root):
@@ -1040,7 +1043,7 @@ def merge_upsert_atomic(
                 base_v = -1 if base is None else int(base["version"])
                 cur_v = -1 if current is None else int(current["version"])
                 if cur_v == base_v or _can_rebase(
-                    spark, root, base, current, plan, keys, partition_by
+                    spark, root, base, current, plan
                 ):
                     _commit_plan(
                         root, current, plan, partition_by, stats_cols, _fault,
@@ -1107,13 +1110,17 @@ def _plan_merge(
     stats_cols: list[str] | None,
     _fault=None,
     bloom_cols: list[str] | None = None,
+    scope: DataFrame | None = None,
 ) -> dict:
     """Stage the merge against snapshot ``base`` WITHOUT committing.
     Returns the staged {key: relpath} mapping, the touched key set,
-    the merged schema, fresh stats, and the distinct update-keys
-    relation (for the OCC rebase hazard check). Staged dirs are
-    invisible to readers until a manifest references them, so this is
-    safe to run outside the writer lock."""
+    the merged schema, fresh stats, and the ``scope`` relation whose
+    old rows the merge removes (default: the distinct update keys; the
+    OCC rebase hazard check probes it). Staged dirs are invisible to
+    readers until a manifest references them, so this is safe to run
+    outside the writer lock."""
+    if scope is None:
+        scope = updates.select(*keys).distinct()
     if base is None:
         staged = _stage_versioned(updates, root, partition_by, _fault)
         plan = {
@@ -1121,7 +1128,7 @@ def _plan_merge(
             "staged": staged,
             "touched": set(staged),
             "schema": updates.schema.json(),
-            "update_keys": updates.select(*keys).distinct(),
+            "scope": scope,
         }
         if stats_cols:
             plan["stats_fresh"] = _collect_stats(
@@ -1147,9 +1154,11 @@ def _plan_merge(
     for f in updates.schema.fields:
         if f.name not in base_names and f.name in phys_in_use:
             mp[f.name] = f"{f.name}_{uuid.uuid4().hex[:8]}"
-    update_keys = updates.select(*keys).distinct()
+    # a USING join moves the join columns to the front: keep the
+    # table's own column order
+    on = scope.columns
     if partition_by is None:
-        kept = old.join(updates.select(*keys), keys, "left_anti")
+        kept = old.join(scope, on, "left_anti").select(*old.columns)
         # allowMissingColumns == additive schema evolution: a batch may
         # add columns (old rows read NULL) or omit dropped ones
         merged = kept.unionByName(updates, allowMissingColumns=True)
@@ -1157,13 +1166,13 @@ def _plan_merge(
         touched = {_FULL}
     else:
         # Touched = partitions of the updates UNION partitions of old
-        # rows whose key is updated (global key matching; see
-        # merge_upsert for the AQE/broadcast rationale).
+        # rows inside ``scope`` (global key matching; see merge_upsert
+        # for the AQE/broadcast rationale).
         touched_vals = {
             r[0]
             for r in updates.select(F.col(partition_by).alias("pv"))
             .unionByName(
-                old.join(update_keys, keys, "left_semi").select(
+                old.join(scope, on, "left_semi").select(
                     F.col(partition_by).alias("pv")
                 )
             )
@@ -1172,7 +1181,9 @@ def _plan_merge(
         }
         touched = {_spark_partition_dir_value(spark, v) for v in touched_vals}
         old_touched = _read_at(spark, root, base, partition_values=list(touched_vals))
-        kept = old_touched.join(update_keys, keys, "left_anti")
+        kept = old_touched.join(scope, on, "left_anti").select(
+            *old_touched.columns
+        )
         merged = kept.unionByName(updates, allowMissingColumns=True)
         staged = _stage_versioned(
             merged, root, partition_by, _fault, column_mapping=mp
@@ -1185,7 +1196,7 @@ def _plan_merge(
         # partitions' older files read added columns as NULL via
         # the explicit-schema scan in read_table
         "schema": merged.schema.json(),
-        "update_keys": update_keys,
+        "scope": scope,
         "column_mapping": mp,
         "retired_physical": sorted(retired),
     }
@@ -1249,16 +1260,21 @@ def _commit_plan(
     }
     if expectations_audit:
         operation["expectations"] = expectations_audit
+    # untouched partitions keep their stats (derived from parts); a
+    # merge without stats_cols records none for the dirs it rewrote
+    fresh_stats = (
+        {"stats": plan.get("stats_fresh", {}),
+         "file_stats": plan.get("fstats_fresh", {})}
+        if stats_cols
+        else {}
+    )
     manifest = _next_manifest(
         current,
         operation,
         partition_by=partition_by,
         schema=plan["schema"],
         parts=new_parts,
-        # untouched partitions keep their stats; a merge without
-        # stats_cols records none
-        stats=plan.get("stats_fresh", {}) if stats_cols else None,
-        file_stats=plan.get("fstats_fresh", {}) if stats_cols else None,
+        **fresh_stats,
         bloom_cols=plan.get("bloom_cols") or (current or {}).get("bloom_cols"),
         # the plan's mapping is authoritative (it may have minted
         # physical names for batch-added columns); _can_rebase refuses
@@ -1286,17 +1302,15 @@ def _can_rebase(
     base: dict | None,
     current: dict | None,
     plan: dict,
-    keys: list[str],
-    partition_by: str | None,
 ) -> bool:
     """Is committing ``plan`` (staged against ``base``) on top of
     ``current`` provably identical to having run the merge after the
     intervening commits? True iff those commits (a) kept the schema,
     (b) touched only partitions disjoint from the plan's, and (c)
-    introduced none of the plan's keys into the dirs they changed (one
-    semi-join bounded by the changed dirs — otherwise the serialized
-    merge would have displaced those rows and the rebase would leave
-    duplicates)."""
+    introduced no row inside the plan's ``scope`` into the dirs they
+    changed (one semi-join bounded by the changed dirs — otherwise the
+    serialized merge would have removed those rows and the rebase
+    would leave duplicates)."""
     if base is None or current is None:
         return False
     if current.get("schema") != base.get("schema"):
@@ -1333,7 +1347,7 @@ def _can_rebase(
             current,
         )
         if (
-            changed_df.join(plan["update_keys"], keys, "left_semi")
+            changed_df.join(plan["scope"], plan["scope"].columns, "left_semi")
             .limit(1)
             .count()
         ):
@@ -1349,6 +1363,7 @@ def _merge_upsert_atomic_locked(
     partition_by: str | None = None,
     stats_cols: list[str] | None = None,
     _fault=None,
+    scope: DataFrame | None = None,
     txn: tuple[str, int] | None = None,
     validated_constraints: dict | None = None,
     bloom_cols: list[str] | None = None,
@@ -1393,7 +1408,7 @@ def _merge_upsert_atomic_locked(
         return  # exactly-once: this epoch already committed
     plan = _plan_merge(
         spark, root, current, updates, keys, partition_by, stats_cols, _fault,
-        bloom_cols=bloom_cols,
+        bloom_cols=bloom_cols, scope=scope,
     )
     _commit_plan(
         root, current, plan, partition_by, stats_cols, _fault, txn=txn,
@@ -1557,6 +1572,7 @@ def compact_partition(
     df.repartition(n_files).write.mode("overwrite").parquet(staging)
     new_rel = f"{_PARTS}/{key}-{uuid.uuid4().hex[:8]}"
     os.replace(staging, os.path.join(root, new_rel))
+    _bloom_rebuild(spark, root, {key: new_rel}, m)
     with _writer_lock(root):
         current = read_manifest(root)
         if current is None or current["parts"].get(key) != rel:

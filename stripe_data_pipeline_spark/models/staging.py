@@ -12,7 +12,7 @@ partition-pruning scan at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -21,6 +21,29 @@ def stage(raw: DataFrame) -> DataFrame:
     return raw.withColumn(
         "created_at_date",
         F.to_date(F.timestamp_seconds(F.col("created").cast("long"))),
+    )
+
+
+def row_text(columns: list[str]) -> Column:
+    """The exact JSON text of each whole row, fields in ``columns``
+    order. Two rows of one schema are equal iff their texts are: every
+    value renders losslessly, and it also covers the map columns that
+    no Spark comparison or ordering accepts."""
+    return F.to_json(F.struct(*[F.col(c) for c in columns]))
+
+
+def dedup_exact(df: DataFrame) -> DataFrame:
+    """One row per ``id``. When a drop holds several versions of an
+    id, the one whose ``row_text`` sorts last wins: a total order over
+    the whole row, so the pick does not depend on file splits or task
+    scheduling (``dropDuplicates`` keeps whichever copy a task met
+    first)."""
+    w = Window.partitionBy("id").orderBy(F.col("__row").desc())
+    return (
+        df.withColumn("__row", row_text(df.columns))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__row", "__rn")
     )
 
 

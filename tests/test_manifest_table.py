@@ -355,6 +355,45 @@ def test_stats_filter_skips_dirs(spark, tmp_path):
     assert sorted(r["id"] for r in all_rows.filter("v >= 2.5").collect()) == [3, 4]
 
 
+def test_merge_without_stats_cols_keeps_untouched_stats(spark, tmp_path):
+    """A merge that records no stats drops only the entries of the dirs
+    it rewrote; untouched dirs keep theirs and keep skipping."""
+    import unittest.mock as mock
+
+    root = str(tmp_path / "mtk")
+    MT.merge_upsert_atomic(
+        spark, root, _rows(spark, OLD), ["id"], "day", stats_cols=["v"]
+    )
+    before = MT.read_manifest(root)
+    MT.merge_upsert_atomic(spark, root, _rows(spark, UPD), ["id"], "day")
+    m = MT.read_manifest(root)
+    # UPD rewrites b and adds c; a is untouched
+    assert m["parts"]["a"] == before["parts"]["a"]
+    assert m["stats"]["a"] == before["stats"]["a"]
+    assert m["file_stats"]["a"] == before["file_stats"]["a"]
+    assert "b" not in m["stats"] and "c" not in m["stats"]
+    got = MT.read_table(spark, root, stats_filter={"v": (2.5, None)})
+    assert not any("/parts/a-" in f for f in got.inputFiles())
+    assert sorted(r["id"] for r in got.filter("v >= 2.5").collect()) == [3, 4]
+    # b and c lack stats: the watermark falls back to a scan
+    with mock.patch.object(MT, "read_table", wraps=MT.read_table) as scan:
+        assert MT.resolve_high_watermark(spark, root, "v") == 30.0
+    assert scan.called
+
+
+def test_occ_compaction_keeps_bloom_sidecar(spark, tmp_path):
+    root = str(tmp_path / "mtb")
+    MT.merge_upsert_atomic(
+        spark, root, spark.range(50).repartition(4), keys=["id"],
+        bloom_cols=["id"],
+    )
+    assert MT.compact_partition(spark, root, None, concurrency="occ") == 1
+    [rel] = MT.read_manifest(root)["parts"].values()
+    assert os.path.exists(os.path.join(root, rel, MT._BLOOM_SIDECAR))
+    t = MT.read_table(spark, root, stats_filter={"id": (7, 7)})
+    assert [r["id"] for r in t.filter("id = 7").collect()] == [7]
+
+
 def test_incremental_run_uses_manifest_hwm(spark, tmp_path):
     root = str(tmp_path / "mth")
     src = _rows(spark, OLD)

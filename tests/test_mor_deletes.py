@@ -308,7 +308,5 @@ def test_locked_merge_rechecks_pending_deletes(spark, tmp_path):
             spark, root, batch, keys=["id"], partition_by="part"
         )
     # and the OCC rebase validator independently refuses
-    plan = {"touched": set(), "update_keys": batch.select("id").distinct()}
-    assert not MT._can_rebase(
-        spark, root, base, current, plan, ["id"], "part"
-    )
+    plan = {"touched": set(), "scope": batch.select("id").distinct()}
+    assert not MT._can_rebase(spark, root, base, current, plan)

@@ -241,3 +241,239 @@ def test_atomic_pipeline_equals_plain(spark, tmp_path):
     )
     for name in plain:
         assert canon(rerun[name]) == canon(plain[name]), name
+
+
+TABLES = (
+    "stg_invoices",
+    "stg_subscriptions",
+    "stg_subscription_updates",
+    "invoices",
+    "invoice_line_items",
+    "subscription_states",
+    "deferred_revenue",
+    "recognized_revenue",
+)
+
+
+def _write_drop(raw, invoices, subscriptions, events):
+    import json
+    import os
+
+    os.makedirs(raw, exist_ok=True)
+    for name, docs in (
+        ("invoices", invoices),
+        ("subscriptions", subscriptions),
+        ("subscription_updates", events),
+    ):
+        with open(os.path.join(raw, f"{name}.json"), "w") as f:
+            f.writelines(json.dumps(d) + "\n" for d in docs)
+
+
+def _drops():
+    """Day one, a day-two drop that re-delivers changed versions, and
+    the final state (day one with day two's versions applied)."""
+    import copy
+    import random
+
+    from stripe_data_pipeline_spark.sources.fixtures import (
+        DAY,
+        make_invoice,
+        make_subscription,
+        make_subscription_event,
+    )
+
+    rng = random.Random(7)
+    inv = {f"in_{i}": make_invoice(i, rng) for i in range(16)}
+    sub = {f"sub_{i}": make_subscription(i) for i in range(20)}
+    evt = {f"evt_{i}": make_subscription_event(i) for i in range(30)}
+    one = (list(inv.values()), list(sub.values()), list(evt.values()))
+
+    changed = {k: copy.deepcopy(inv[k]) for k in ("in_1", "in_2", "in_3", "in_4", "in_5")}
+    line = changed["in_1"]["lines"]["data"][0]  # period shrink: 10 -> 3 days
+    line["period"]["end"] = line["period"]["start"] + 3 * DAY
+    changed["in_2"]["lines"]["data"].pop()  # a removed line
+    changed["in_3"]["currency"] = "gbp"  # a currency change
+    for li in changed["in_3"]["lines"]["data"]:
+        li["currency"] = "gbp"
+    changed["in_4"]["created"] += 3 * DAY  # created moves to another date
+    changed["in_5"].update(status="open", amount_paid=0)  # paid -> non-paid
+    new = {f"in_{i}": make_invoice(i, rng) for i in range(16, 19)}
+    sub_two = {"sub_4": dict(sub["sub_4"], status="canceled")}
+    # evt_23 is sub_3's newest event and evt_15 sub_15's only one: both
+    # move to another subscription
+    evt_two = {
+        "evt_23": dict(evt["evt_23"], data='{"object": {"id": "sub_7", "status": "past_due"}}'),
+        "evt_15": dict(evt["evt_15"], data='{"object": {"id": "sub_2", "status": "canceled"}}'),
+        "evt_30": make_subscription_event(30),
+    }
+    two = (
+        [*changed.values(), inv["in_6"], *new.values()],  # in_6 re-delivered as is
+        [*sub_two.values(), sub["sub_5"]],
+        list(evt_two.values()),
+    )
+    final = (
+        list((inv | changed | new).values()),
+        list((sub | sub_two).values()),
+        list((evt | evt_two).values()),
+    )
+    return one, two, final
+
+
+def _canon(tables):
+    # hive-partitioned parquet reads the partition column LAST, the
+    # manifest sink keeps declared order — compare by name
+    return {
+        name: sorted(repr(sorted(r.asDict().items())) for r in tables[name].collect())
+        for name in TABLES
+    }
+
+
+def _files(wh):
+    import os
+
+    return {
+        os.path.relpath(os.path.join(d, n), wh)
+        for d, _, names in os.walk(wh)
+        for n in names
+    }
+
+
+@pytest.mark.parametrize("atomic", [False, True], ids=["plain", "atomic"])
+def test_day_two_merge_equals_backfill_of_final_state(spark, tmp_path, atomic):
+    """Change-set contract: day one + a day-two drop holding a period
+    shrink, a removed line, a currency change, a moved ``created``, a
+    paid invoice turned open and re-targeted events equals a backfill
+    of the final state in all 8 tables — merged cleanly, and merged
+    after a quality-gate abort left staging ahead of the marts. An
+    identical re-run then writes nothing."""
+    import shutil
+
+    from stripe_data_pipeline_spark import manifest_table as MT
+    from stripe_data_pipeline_spark.plans.pipeline import (
+        PENDING_MARKER,
+        PipelineMonitor,
+        QualityGateError,
+    )
+
+    one, two, final = _drops()
+    raw = {k: str(tmp_path / f"raw_{k}") for k in ("one", "two", "final")}
+    for k, docs in zip(raw, (one, two, final)):
+        _write_drop(raw[k], *docs)
+    run = lambda r, wh, **kw: run_pipeline(  # noqa: E731
+        spark, raw[r], str(tmp_path / wh), LOADED_AT, atomic=atomic, **kw
+    )
+    want = _canon(run("final", "backfill"))
+
+    run("one", "merged")
+    shutil.copytree(tmp_path / "merged", tmp_path / "aborted")
+    got = run("two", "merged")
+    assert _canon(got) == want
+    assert got["invoices"].filter(F.col("invoice_id") == "in_5").first()["status"] == "open"
+    assert got["deferred_revenue"].filter(F.col("invoice_id") == "in_5").count() == 0
+
+    # the fixture trips the missing-period-end gate: staging lands, the
+    # marts do not, and the next clean run catches them up
+    with pytest.raises(QualityGateError):
+        run("two", "aborted", monitor=PipelineMonitor(quality_gates=True))
+    assert (tmp_path / "aborted" / PENDING_MARKER).exists()
+    mon = PipelineMonitor()
+    assert _canon(run("two", "aborted", monitor=mon)) == want
+    assert [e["changed"] for e in mon.report()["layers"][:3]] == [0, 0, 0]
+    assert not (tmp_path / "aborted" / PENDING_MARKER).exists()
+
+    wh = str(tmp_path / "merged")
+    files = _files(wh)
+    versions = {t: MT.read_manifest(f"{wh}/{t}")["version"] for t in TABLES} if atomic else {}
+    mon = PipelineMonitor()
+    assert _canon(run("two", "merged", monitor=mon)) == want
+    assert _files(wh) == files
+    if atomic:
+        assert {t: MT.read_manifest(f"{wh}/{t}")["version"] for t in TABLES} == versions
+    rep = mon.report()["layers"]
+    assert [e["changed"] for e in rep[:3]] == [0, 0, 0]
+    assert all(e["status"] == "skipped" for e in rep)
+
+
+def test_staging_dedup_is_deterministic(spark, tmp_path):
+    """Two versions of one id in a drop: the winner is fixed by the
+    whole row (here the one whose ``status`` text sorts last), whether
+    the drop is read as one partition or four, so a re-run with other
+    splits finds an empty change set."""
+    import json
+    import os
+    import random
+
+    from stripe_data_pipeline_spark.plans.pipeline import PipelineMonitor
+    from stripe_data_pipeline_spark.sources.fixtures import make_invoice, write_fixture
+    from stripe_data_pipeline_spark.sources.stripe_schema import INVOICE_SCHEMA
+
+    raw, wh = str(tmp_path / "raw"), str(tmp_path / "wh")
+    write_fixture(raw, n_invoices=12, duplicate_every=0)
+    path = os.path.join(raw, "invoices.json")
+    with open(path) as f:
+        docs = f.readlines()
+    paid = make_invoice(1, random.Random(0))
+    assert paid["status"] == "paid"
+    opened = json.dumps(dict(paid, status="open")) + "\n"
+    with open(path, "w") as f:  # the losing version first, the winner last
+        f.writelines([opened, *docs])
+
+    size = os.path.getsize(path)
+
+    def run_split(n_parts):
+        conf = "spark.sql.files.maxPartitionBytes"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, str(-(-size // n_parts)))
+        try:
+            parts = spark.read.schema(INVOICE_SCHEMA).json(path).rdd.getNumPartitions()
+            assert parts == n_parts
+            mon = PipelineMonitor()
+            t = run_pipeline(spark, raw, wh, LOADED_AT, monitor=mon)
+            row = t["stg_invoices"].filter(F.col("id") == "in_1").collect()
+            return row, mon.report()["layers"][0]
+        finally:
+            spark.conf.set(conf, prev)
+
+    first, rep = run_split(1)
+    assert [r["status"] for r in first] == ["paid"] and rep["changed"] == 12
+    again, rep = run_split(4)
+    assert again == first
+    assert rep["changed"] == 0 and rep["status"] == "skipped"
+
+
+@pytest.mark.parametrize("atomic", [False, True], ids=["plain", "atomic"])
+def test_sink_entry_points_stay_patchable(spark, tmp_path, monkeypatch, atomic):
+    """The benchmark's tracer (perfbench/trace.py::wrap_sinks) replaces
+    the module attributes ``plans.pipeline.merge_upsert`` and
+    ``manifest_table.merge_upsert_atomic`` and forwards ``(spark, path,
+    df, *args, **kwargs)``. A fresh run must reach every table through
+    them, and an identical re-run must call neither."""
+    import os
+
+    from stripe_data_pipeline_spark import manifest_table as MT
+    from stripe_data_pipeline_spark.plans import pipeline
+
+    calls = {"merge_upsert": [], "merge_upsert_atomic": []}
+
+    def recording(mod, attr):
+        fn = getattr(mod, attr)
+
+        def call(spark, path, df, *args, **kwargs):
+            calls[attr].append(os.path.basename(path))
+            return fn(spark, path, df, *args, **kwargs)
+
+        monkeypatch.setattr(mod, attr, call)
+
+    recording(pipeline, "merge_upsert")
+    recording(MT, "merge_upsert_atomic")
+    raw, wh = str(tmp_path / "raw"), str(tmp_path / "wh")
+    write_fixture(raw, n_invoices=6)
+    used, unused = (
+        ("merge_upsert_atomic", "merge_upsert") if atomic
+        else ("merge_upsert", "merge_upsert_atomic")
+    )
+    run_pipeline(spark, raw, wh, LOADED_AT, atomic=atomic)
+    assert sorted(calls[used]) == sorted(TABLES) and calls[unused] == []
+    calls[used].clear()
+    run_pipeline(spark, raw, wh, LOADED_AT, atomic=atomic)
+    assert calls == {"merge_upsert": [], "merge_upsert_atomic": []}
